@@ -65,11 +65,11 @@ private[graft] object Layout {
   /** [[writeMarker]] with an ATOMIC publish: payload goes to a hidden
     * temp name first and RENAMES into place, so a crash mid-write can
     * never leave a torn payload under the real name. For markers whose
-    * payload is a LIST a recovery path acts on (e.g. compactTail's
-    * fold-set sentinel), a torn list is silent corruption — the
+    * payload is a LIST a recovery path acts on (e.g. the clustered
+    * layouts' commit record), a torn list is silent corruption — the
     * recovery would process only the surviving prefix; single-token
     * markers don't need this (any prefix is used self-consistently).
-    * The dest must not exist (sentinels are created once per
+    * The dest must not exist (records are created once per
     * operation); a leftover temp from a pre-rename crash is hidden
     * (underscore name) and swept by the caller's recovery. */
   def writeMarkerAtomic(spark: SparkSession, path: String, file: String,
@@ -694,17 +694,6 @@ private[graft] object Layout {
     * exists to prevent — so they all call this. */
   def isHidden(name: String): Boolean =
     name.startsWith("_") || name.startsWith(".")
-
-  /** [[publishStaged]] for operators that stage a whole rewrite
-    * (the [[graft.operators.Zorder.compactClustered]] publish step):
-    * move every data file under `stagingRoot` into `layoutRoot` under
-    * `prefix`, preserving relative directory structure. No-op when the
-    * staging dir is absent (a recovery path that already published). */
-  private[operators] def publishDir(fs: org.apache.hadoop.fs.FileSystem,
-      stagingRoot: org.apache.hadoop.fs.Path,
-      layoutRoot: org.apache.hadoop.fs.Path, prefix: String): Unit =
-    if (fs.exists(stagingRoot))
-      publishStaged(fs, stagingRoot, stagingRoot, layoutRoot, prefix)
 
   /** Delete EVERY published data file under `dir` (hidden protocol
     * state untouched) — the stale-file purge of the rowless re-stamp

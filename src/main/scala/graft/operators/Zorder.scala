@@ -80,10 +80,6 @@ object Zorder {
 
   private[graft] val markerFile = "_graft_clustering"
   private[graft] val schemaFile = "_graft_schema"
-  private val compactingFile = "_graft_compacting"
-  private val compactTmpDir = "_graft_compact_tmp"
-  private val tailCompactingFile = "_graft_tail_compacting"
-  private val tailTmpDir = "_graft_tail_tmp"
   private[graft] val zrangesFile = "_graft_zranges"
 
   /** The curve value, MATERIALIZED as a physical column in every
@@ -140,9 +136,6 @@ object Zorder {
   // reads of the layout do not see deletes — DV layouts are
   // manifest-readers-only ([[readClustered]]).
   private[graft] val dvPrefix = "dv-"
-  private val dvTmpDir = "_graft_dv_tmp"
-  private val morTmpDir = "_graft_mor_tmp"
-  private val morCommittingFile = "_graft_mor_committing"
   private[graft] def isDvName(n: String): Boolean = n.startsWith(dvPrefix)
 
   /** Test seam: invoked with a step label at each reader-visible
@@ -472,13 +465,13 @@ object Zorder {
     * an empty path = bootstrap with a `write*` form first — unlike the
     * index families there is no caller-side parameter set to bootstrap
     * from, the quantization comes from a stats pass only a full write
-    * runs), or an in-flight/crashed compaction sentinel (run
-    * [[compactClustered]] to recover first). */
+    * runs), or a standing commit record of an in-flight or crashed
+    * rewrite (run [[compactClustered]] to recover first). */
   def appendClustered(batch: DataFrame, path: String, batchId: Long,
       batchFiles: Int = 4): Boolean = {
     val spark = batch.sparkSession
     require(batchFiles >= 1, s"batchFiles must be >= 1, got $batchFiles")
-    // ONE lease across sentinel check + marker read + publish: a
+    // ONE lease across record check + marker read + publish: a
     // compaction starting between the check and the append would
     // otherwise sweep files this append is publishing
     Layout.withWriterLease(spark, path, "appendClustered") {
@@ -607,28 +600,33 @@ object Zorder {
     * replayed pre-compact batch stays a no-op rather than
     * re-appending folded rows).
     *
-    * Protocol (single writer per path, like every [[Layout]] rewrite):
+    * Protocol (single writer per path, like every [[Layout]] rewrite)
+    * — the one commit protocol every clustered rewrite shares
+    * ([[recordCommit]] / [[finishCommit]] / [[recoverCommit]]):
     *   1. stage the full re-clustered rewrite under the hidden
-    *      `_graft_compact_tmp` (parquet readers never see it);
-    *   2. stamp the `_graft_compacting` sentinel with a fresh token T —
-    *      the writer-side commit point;
+    *      `_graft_commit_tmp` (parquet readers never see it);
+    *   2. write the `_graft_commit` record — staged subdir and publish
+    *      prefix `c<T>-`, the planned names, every file live before the
+    *      fold as the retire list, `retainMs`, "base manifest" — the
+    *      writer-side commit point;
     *   3. publish the staged files into the root under `c<T>-` (the
     *      root transiently holds BOTH generations);
-    *   4. flip the generation manifest to exactly the `c<T>-` files —
-    *      the READER-side commit point ([[readClustered]] resolves the
+    *   4. stamp a BASE manifest of exactly the planned files — the
+    *      READER-side commit point ([[readClustered]] resolves the
     *      manifest, so it sees the old generation until this instant
     *      and the new one after, never a mixture);
-    *   5. delete every published data file NOT carrying `c<T>-`;
-    *   6. drop the staging dir, then the sentinel.
-    * Every crash window recovers on the next call: sentinel present →
-    * resume steps 3–6 with the RECORDED token (files already published
-    * under it survive and re-publish is a no-op — that is what the
-    * token is for); staging without a sentinel → a pre-commit crash,
-    * the stale staging is discarded. Because old files outlive the
-    * manifest flip, a manifest reader resolves a COMPLETE generation
-    * at every step, crashed states and recovery steps included; only
-    * a direct directory read (the legacy/raw path) can observe the
-    * transient both-generations state between steps 3 and 5.
+    *   5. retire (under `retainMs` grace) or delete the listed files;
+    *   6. drop the staging dir, then the record.
+    * Every crash window recovers on the next rewrite call: record
+    * present → roll steps 3–6 forward from the record (renames of
+    * already-published files are gone from staging, the manifest stamp
+    * and the sweep are set operations); staging without a record → a
+    * pre-commit crash, the stale staging is discarded. Because old
+    * files outlive the manifest flip, a manifest reader resolves a
+    * COMPLETE generation at every step, crashed states and recovery
+    * steps included; only a direct directory read (the legacy/raw
+    * path) can observe the transient both-generations state between
+    * steps 3 and 5.
     *
     * At 100 TB this whole-layout form is the periodic DEFRAGMENTATION
     * (it alone restores the exact `numFiles` grid); the per-ingest
@@ -642,57 +640,9 @@ object Zorder {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = fs.makeQualified(new org.apache.hadoop.fs.Path(path))
-    val sentinel = new org.apache.hadoop.fs.Path(root, compactingFile)
-    val tmp = new org.apache.hadoop.fs.Path(root, compactTmpDir)
-    // files a PREVIOUS retention compact left in grace: excluded from
-    // every enumeration below (they are old-generation rows — folding
-    // or re-deleting them would duplicate or break in-flight readers).
-    // The ledger is read once per phase: the recovery arm takes its
-    // own read (its retireOrDelete may append entries), the main path
-    // reads once into retired0 and reuses it for the final sweep —
-    // under the lease nothing else writes it mid-call.
-    def sweepVictims(token: String,
-        retired: Set[String]): Seq[org.apache.hadoop.fs.FileStatus] =
-      listDataFiles(fs, root).filter(st =>
-        !st.getPath.getName.startsWith(s"c$token-") &&
-          !retired(st.getPath.getName))
-    // finish a crashed TAIL compaction first (same lease): its fold
-    // set's files are deleted-but-unreplaced until its staged files
-    // publish, and this whole-layout fold must see the completed state
-    recoverTailCrash(spark, fs, root)
-    // and a crashed merge-on-read commit: its published tombstones /
-    // insert files are unmanifested until its recorded commit resumes,
-    // and this fold must see the completed batch
-    recoverMorCrash(spark, fs, root)
-    // finish a crashed compaction before starting this one — the same
-    // publish → FLIP MANIFEST → delete order as the main path, so a
-    // reader resolving at any recovery step still sees one complete
-    // generation (a crashed swap is readable-consistent throughout:
-    // the manifest points at the old files until every new file is on
-    // disk, then at exactly the new ones)
-    if (fs.exists(sentinel)) {
-      val token = Layout.readMarker(spark, path, compactingFile).get
-      require(token.nonEmpty,
-        s"compactClustered: empty $compactingFile sentinel at $path — " +
-          "cannot tell the crashed generation's files apart; resolve " +
-          "manually")
-      Layout.publishDir(fs, tmp, root, s"c$token-")
-      val recLedger = readRetired(spark, path)
-      stampManifest(spark, fs, root, footerStats(spark, fs, root,
-        listDataFiles(fs, root)
-          .map(_.getPath.getName).filter(_.startsWith(s"c$token-")),
-        clusteringOf(spark, path)),
-        deferGc = retainMs > 0 || recLedger.nonEmpty)
-      retireOrDelete(spark, fs, root,
-        sweepVictims(token, recLedger.keySet), retainMs, recLedger)
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      require(fs.delete(sentinel, false),
-        s"compactClustered: could not clear $sentinel after recovery")
-    } else if (fs.exists(tmp)) {
-      // pre-commit crash: the staged rewrite never became the layout
-      require(fs.delete(tmp, true),
-        s"compactClustered: could not clear stale staging $tmp")
-    }
+    // finish (or discard) any crashed rewrite first — this fold must
+    // see the completed state
+    recoverCommit(spark, fs, root)
     // roll back any CRASHED append before folding: an unledgered
     // publish folded into the compacted files would strand the
     // stream's sweep-and-redo — the replay re-appends rows the fold
@@ -707,20 +657,22 @@ object Zorder {
     // the layout, not one sampled footer's view — with schema-checked
     // appends the schemas agree, but a pre-check legacy layout must
     // surface its width here rather than silently drop columns.
-    // Explicit LIVE paths, never the directory: retired files are
-    // old-generation rows whose fold-in would duplicate every one.
+    // Explicit LIVE paths, never the directory: files a PREVIOUS
+    // retention compact left in grace are old-generation rows whose
+    // fold-in would duplicate every one. The ledger is read once: under
+    // the lease nothing else writes it mid-call.
     val retiredM = readRetired(spark, path)
-    val retired0 = retiredM.keySet
     // DV files are excluded as fold SOURCES and applied as the fold's
     // FILTER (from the manifest, never the directory — an orphan DV
     // from a crashed delete commit must not delete anything): the
     // whole compact MATERIALIZES every tombstone, its fresh base
-    // manifest carries no dv- entries, and the victim sweep below
+    // manifest carries no dv- entries, and the victim list below
     // reclaims the superseded DV files like any old-generation file
     val dvNames0 = currentManifest(spark, fs, root)
       .map(_._2.filter(isDvName)).getOrElse(Seq.empty)
-    val livePaths = listDataFiles(fs, root)
-      .filterNot(st => retired0(st.getPath.getName))
+    val victims = listDataFiles(fs, root)
+      .filterNot(st => retiredM.contains(st.getPath.getName))
+    val livePaths = victims
       .filterNot(st => isDvName(st.getPath.getName)).map(_.getPath)
     require(livePaths.nonEmpty,
       s"compactClustered: no live data files at $path — nothing to fold")
@@ -736,30 +688,14 @@ object Zorder {
         .repartitionByRange(cl.numFiles, col(zColName))
         .sortWithinPartitions(col(zColName))
         .drop(drop: _*)
-        .write.mode("overwrite").parquet(tmp.toString)
+        .write.mode("overwrite").parquet(stagedDir(root, "c").toString)
     }
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    Layout.writeMarker(spark, path, compactingFile, token)
-    onProtocolStep("whole-sentinel")
-    // publish-new → flip-manifest → delete-old: between publish and
-    // flip the root holds BOTH generations, but the manifest still
-    // points at the old one — a reader resolves a complete set at
-    // every step; the flip is the single reader-visible commit
-    Layout.publishDir(fs, tmp, root, s"c$token-")
-    onProtocolStep("whole-published")
-    stampManifest(spark, fs, root, footerStats(spark, fs, root,
-      listDataFiles(fs, root)
-        .map(_.getPath.getName).filter(_.startsWith(s"c$token-")),
-      Some(cl)),
-      deferGc = retainMs > 0 || retired0.nonEmpty)
-    onProtocolStep("whole-manifest")
-    retireOrDelete(spark, fs, root, sweepVictims(token, retired0),
-      retainMs, retiredM)
-    onProtocolStep("whole-swept")
-    fs.delete(tmp, true)
-    require(fs.delete(sentinel, false),
-      s"compactClustered: could not clear $sentinel after publish")
-    onProtocolStep("whole-done")
+    // the new generation is a BASE manifest of exactly the staged
+    // files; every file live before the fold retires or goes
+    val token = newToken()
+    commit(spark, fs, root, planCommit(fs, root, "whole", token,
+      Seq("c" -> s"c$token-"), victims.map(_.getPath.getName), retainMs,
+      batchId = None, base = true), Some(cl), retiredM)
     // the z-range cache describes files the swap just deleted — drop
     // it (a pure cache: the next fold's residentIvs re-fills misses
     // from the fresh grid's FOOTERS — driver-only, ~ms — thanks to
@@ -822,25 +758,23 @@ object Zorder {
     * grid's.
     *
     * ==Crash protocol==
-    * Same staged-swap discipline as [[compactClustered]], with the
-    * fold set RECORDED in the sentinel (the whole-compact form can
-    * identify victims as "everything not carrying the token"; a
-    * partial fold cannot): stage under `_graft_tail_tmp`; stamp
-    * `_graft_tail_compacting` = token + fold-file list (the
-    * writer-side commit point); publish staged files under
-    * `t<token>-`; flip the generation manifest to (current − fold set
-    * + replacements) — the READER-side commit point; delete exactly
-    * the listed fold files; drop staging, then the sentinel. Every
-    * crash window recovers deterministically ([[recoverTailCrash]],
-    * run by both compact forms): sentinel present → resume
-    * publish/flip/delete with the recorded token and list (all three
-    * are idempotent set operations); staging without sentinel →
-    * pre-commit crash, staging discarded. A manifest reader
-    * ([[readClustered]]) resolves a complete generation at every
-    * step, crashed states included — fold files outlive the flip.
-    * Appends refuse while the sentinel stands. The batch LEDGER is
-    * kept, crashed unledgered appends are rolled back first, and
-    * replays stay no-ops — the [[compactClustered]] rules unchanged.
+    * The [[compactClustered]] commit protocol, one record and one
+    * recovery rule: stage under `_graft_commit_tmp`; write the
+    * `_graft_commit` record — publish prefix `t<token>-`, the planned
+    * replacement names, the fold set as the retire list (a partial
+    * fold's victims cannot be told apart by name pattern), the
+    * caller's `retainMs` (so a crash keeps its reader grace), "delta
+    * manifest" — the writer-side commit point; publish; commit a
+    * manifest delta of (+ replacements, − fold set) — the READER-side
+    * commit point; retire or delete the fold set; drop staging, then
+    * the record. Every rewrite entry recovers a standing record by
+    * rolling it forward; staging without a record is pre-commit debris
+    * and is discarded. A manifest reader ([[readClustered]]) resolves
+    * a complete generation at every step, crashed states included —
+    * fold files outlive the flip. Appends refuse while the record
+    * stands. The batch LEDGER is kept, crashed unledgered appends are
+    * rolled back first, and replays stay no-ops — the
+    * [[compactClustered]] rules unchanged.
     *
     * Returns true if a tail was folded; false = no `b<id>-` files (the
     * steady state — callers can invoke it unconditionally per ingest
@@ -861,11 +795,11 @@ object Zorder {
   /** Keyed MERGE — CDC apply / upsert / delete on a clustered layout,
     * rewriting EXACTLY the files the changed keys can live in (located
     * by clustering-value containment over the per-file z-ranges, the
-    * [[compactTail]] discipline) through the same staged-fold crash
-    * protocol: sentinel + publish-new → flip-manifest → delete-old (or
-    * retire under `retainMs` grace), recovery shared with the tail
-    * fold. Rewrite cost is ∝ touched files × overlap + the standing
-    * tail, never table size — the 100 TB CDC-apply shape.
+    * [[compactTail]] discipline) through the same commit protocol:
+    * record + publish-new → flip-manifest → delete-old (or retire
+    * under `retainMs` grace), recovered like every rewrite. Rewrite
+    * cost is ∝ touched files × overlap + the standing tail, never
+    * table size — the 100 TB CDC-apply shape.
     *
     * Semantics (the Delta MERGE essentials):
     *   - `changes` rows carry the layout's FULL data schema (so every
@@ -1008,10 +942,12 @@ object Zorder {
     * commit is atomic (readers see all tombstones or none), a pinned
     * pre-delete epoch keeps serving the undeleted rows, retention
     * and vacuum govern superseded DV files exactly like data files.
-    * Crash windows: before publish → stale `_graft_dv_tmp`, swept
-    * here under the lease; after publish, before commit → orphan
-    * `dv-` files no resolve can reach, swept here and aged out by
-    * vacuum's self-heal; after commit → the delete IS committed.
+    * Its one commit point is that manifest delta, so it writes no
+    * commit record; it stages under the shared `_graft_commit_tmp`.
+    * Crash windows: before publish → stale staging, discarded by the
+    * next rewrite entry; after publish, before commit → orphan `dv-`
+    * files no resolve can reach, swept here and aged out by vacuum's
+    * self-heal; after commit → the delete IS committed.
     *
     * Returns the number of row positions tombstoned by THIS call. */
   def deleteClustered(spark: SparkSession, path: String,
@@ -1054,8 +990,9 @@ object Zorder {
             cl, dvLive, tails, mains, keyed, keyCols)
           if (cnt == 0L) 0L
           else {
-            val added = publishStagedDvs(spark, fs, root,
-              java.util.UUID.randomUUID.toString.take(8))
+            // record-free: publish, then the one manifest delta commit
+            val added = publish(fs, root, "dv", s"$dvPrefix${newToken()}-")
+            fs.delete(new org.apache.hadoop.fs.Path(root, stagingDir), true)
             commitManifestDelta(spark, fs, root,
               added.map(_ -> "").toMap, Set.empty,
               deferGc = retiredM.nonEmpty)
@@ -1071,23 +1008,18 @@ object Zorder {
       } finally keyed.unpersist()
     }
 
-  /** Sweep crashed-delete/upsert debris under the writer lease: stale
-    * `_graft_dv_tmp` staging (pre-publish crash) and
-    * published-but-uncommitted dv- orphans (pre-commit crash —
-    * unreachable by any resolve; ledgered ones are a previous
-    * compact's grace and stay). */
+  /** Sweep a crashed delete's published-but-uncommitted dv- orphans
+    * under the writer lease (unreachable by any resolve; ledgered ones
+    * are a previous compact's grace and stay). Its stale staging is
+    * the shared staging dir, discarded by [[recoverCommit]]. */
   private def sweepDvDebris(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      manifested: Set[String], retired: Map[String, Long]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(root, dvTmpDir)
-    if (fs.exists(tmp)) require(fs.delete(tmp, true),
-      s"deleteClustered: could not clear stale staging $tmp")
+      manifested: Set[String], retired: Map[String, Long]): Unit =
     listDataFiles(fs, root).map(_.getPath.getName)
       .filter(n => isDvName(n) && !manifested(n) && !retired.contains(n))
       .foreach(n => require(
         fs.delete(new org.apache.hadoop.fs.Path(root, n), false),
         s"deleteClustered: could not sweep orphan $n"))
-  }
 
   /** STAGE fresh tombstones for every resident copy (in `tails` +
     * the located `mains`) of a key row in `keyed` — the core
@@ -1099,20 +1031,16 @@ object Zorder {
     * data-file base names) — both observed from the staging WRITE job
     * itself (no re-read job); on 0 (absent
     * keys, or a retry) NOTHING is left staged. On > 0 the tombstone
-    * parquet sits under `_graft_dv_tmp` awaiting [[publishStagedDvs]]
-    * — staging and publishing are split so [[mergeOnRead]] can put
-    * its commit sentinel between them. */
+    * parquet sits in the `dv` subdir of the shared staging dir,
+    * awaiting its caller's publish — staging and publishing are split
+    * so [[mergeOnRead]] can put its commit record between them. */
   private def stageTombstones(spark: SparkSession, path: String,
       fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
       cl: Clustering, dvLive: Seq[String],
       tails: Seq[org.apache.hadoop.fs.FileStatus],
       mains: Seq[org.apache.hadoop.fs.FileStatus],
       keyed: DataFrame, keyCols: Seq[String]): (Long, Set[String]) = {
-    val tmp = new org.apache.hadoop.fs.Path(root, dvTmpDir)
-    // defensive: a stale staging from a pre-commit crash must never
-    // ride along into a caller's later publish (the victims-empty arm
-    // below would otherwise leave it standing)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+    val tmp = stagedDir(root, "dv")
     val ivs = residentIvs(spark, path, cl, tails ++ mains, mains)
     def realIv(n: String): Option[(Long, Long)] =
       ivs.get(n).filter(iv => iv._1 <= iv._2)
@@ -1176,24 +1104,10 @@ object Zorder {
             st.getPath, conf))
         try r.getRecordCount finally r.close()
       }.sum
-      if (cnt == 0L && fs.exists(tmp)) fs.delete(tmp, true)
+      if (cnt == 0L)
+        fs.delete(new org.apache.hadoop.fs.Path(root, stagingDir), true)
       (cnt, victimSet)
     }
-  }
-
-  /** Publish the staged tombstone parquet into the root under
-    * `dv-<token>-` and return the published names. Idempotent per
-    * token (the publishFlattened rename discipline — files already
-    * published survive, their staged copies are gone). Callers commit
-    * the returned names into the manifest themselves. */
-  private def publishStagedDvs(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      token: String): Seq[String] = {
-    val tmp = new org.apache.hadoop.fs.Path(root, dvTmpDir)
-    publishFlattened(fs, tmp, root, s"$dvPrefix$token-")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    listDataFiles(fs, root).map(_.getPath.getName)
-      .filter(_.startsWith(s"$dvPrefix$token-"))
   }
 
   /** Keyed MERGE in the MERGE-ON-READ discipline — [[mergeClustered]]
@@ -1214,20 +1128,20 @@ object Zorder {
     * — the rewrite-now form ([[mergeClustered]]) remains for when
     * read amplification matters more than write cost.
     *
-    * ==Why this verb has its own commit sentinel==
+    * ==Why this verb commits through the record==
     * Key-addressed tombstones are NOT state-idempotent the way the
     * rewrite merge is: once a batch's inserts are visible (committed,
     * or folded into replacements), re-running the tombstone pass
     * would address the batch's own NEW copies — the ledger blocks the
     * re-insert, and the replay would destroy the data it delivered.
     * So replays must never re-run a completed batch, and a crashed
-    * one must be COMPLETED, not redone: `_graft_mor_committing`
-    * records the planned dv and insert file names (atomic,
-    * length-checked — the tail-fold sentinel discipline), and every
-    * fold-family entry recovers it by resuming publish → ledger →
-    * commit, all idempotent set operations. Before the sentinel,
-    * nothing is durable (stagings are swept); from the sentinel on,
-    * recovery finishes the batch exactly once; the manifest delta
+    * one must be COMPLETED, not redone: the shared `_graft_commit`
+    * record ([[recordCommit]]) lists the planned dv and insert file
+    * names and the batch id to ledger, and every rewrite entry rolls
+    * it forward through publish → ledger → commit, all idempotent set
+    * operations. Before the record, nothing is durable (staging is
+    * discarded); from the record on, recovery finishes the batch
+    * exactly once; the manifest delta
     * stays the single reader-visible atom (a reader resolves the full
     * old state or tombstones AND inserts together at every crash
     * window). A replayed `batchId` whose ledger entry stands returns
@@ -1245,7 +1159,7 @@ object Zorder {
         tailFoldPreamble(spark, path, "mergeOnRead", 0L)
       require(batchFiles >= 1, s"batchFiles must be >= 1, got $batchFiles")
       // a negative id would escape the b\d+- tail classification AND
-      // brick recovery (the sentinel header check is \d{1,18}) — the
+      // brick recovery (the record's header check is \d{1,18}) — the
       // idempotentAppend gate, enforced before anything durable
       require(batchId >= 0, s"mergeOnRead: batchId must be >= 0, " +
         s"got $batchId")
@@ -1277,7 +1191,7 @@ object Zorder {
           "the manifest)"))._2.toSet
       sweepDvDebris(spark, fs, root, manifested, retiredM)
       // exactly-once: an applied batch is a COMPLETED batch (the
-      // sentinel protocol guarantees ledger ⇒ published + committed,
+      // commit record guarantees ledger ⇒ published + committed,
       // or recovered by the preamble above) — a replay must not re-run
       // the tombstone pass, which would address the batch's own
       // inserts wherever a fold has moved them
@@ -1317,7 +1231,7 @@ object Zorder {
           // 1. STAGE tombstones for every resident copy of every
           // change key — updates AND deletes (the change rows carry
           // the full data schema, so the clustering address is
-          // present). Nothing durable happens before the sentinel.
+          // present). Nothing durable happens before the record.
           val keysOnly = keyed.select(
             (keyCols ++ cl.cols.map(_.name).filterNot(keyCols.contains))
               .map(col): _*).distinct()
@@ -1331,8 +1245,6 @@ object Zorder {
           // committing one per delete batch would inflate the tail
           // file count (tripping tailCompactDue early, joining every
           // fold scan) for no row
-          val morTmp = new org.apache.hadoop.fs.Path(root, morTmpDir)
-          if (fs.exists(morTmp)) fs.delete(morTmp, true)
           if (!upserts.isEmpty) {
             val (staged, z, drop) = clusteredFrame(upserts, cl)
             withStatsTimestamps(spark) {
@@ -1341,47 +1253,32 @@ object Zorder {
                   math.min(batchFiles, cl.numFiles), col(zColName))
                 .sortWithinPartitions(col(zColName))
                 .drop(drop: _*)
-                .write.mode("overwrite").parquet(morTmp.toString)
+                .write.mode("overwrite").parquet(
+                  stagedDir(root, "b").toString)
             }
           }
           onProtocolStep("mor-staged")
-          // planned names: both stagings are FLAT, so the publish
-          // destination is prefix + staged name — computable here,
-          // recordable in the sentinel, reproducible in recovery
-          val token = java.util.UUID.randomUUID.toString.take(8)
-          def stagedNames(d: org.apache.hadoop.fs.Path): Seq[String] =
-            if (!fs.exists(d)) Seq.empty
-            else fs.listStatus(d).toSeq.filter(st => !st.isDirectory &&
-              !Layout.isHidden(st.getPath.getName))
-              .map(_.getPath.getName).sorted
-          val dvTmp = new org.apache.hadoop.fs.Path(root, dvTmpDir)
-          val dvPlanned = if (nTomb == 0L) Seq.empty
-            else stagedNames(dvTmp).map(n => s"$dvPrefix$token-$n")
-          val bPlanned = stagedNames(morTmp)
-            .map(n => s"b$batchId-m$token-$n")
-          if (dvPlanned.isEmpty && bPlanned.isEmpty) {
+          // 3. the writer-side commit point: the record lists the
+          // planned dv and insert names and the batch to ledger; 4–6.
+          // publish → ledger → ONE manifest delta commit (the
+          // reader-visible atom), shared verbatim with recovery
+          val token = newToken()
+          val c = planCommit(fs, root, "mor", token,
+            Seq("dv" -> s"$dvPrefix$token-", "b" -> s"b$batchId-m$token-"),
+            retire = Nil, retainMs = 0L, batchId = Some(batchId),
+            base = false)
+          if (c.planned.isEmpty) {
             // a batch that changes nothing (all-absent deletes):
             // nothing to publish, nothing to ledger — NOT applied, so
             // a later batch reusing the id is not silently swallowed
-            if (fs.exists(morTmp)) fs.delete(morTmp, true)
+            fs.delete(new org.apache.hadoop.fs.Path(root, stagingDir), true)
             0L
           } else {
-            // 3. the writer-side commit point: sentinel records the
-            // FULL planned name lists (length-checked — acting on a
-            // prefix would commit a partial batch)
-            Layout.writeMarkerAtomic(spark, path, morCommittingFile,
-              (s"v1 $batchId ${dvPlanned.length} ${bPlanned.length}" +:
-                (dvPlanned ++ bPlanned).map(
-                  java.net.URLEncoder.encode(_, "UTF-8")))
-                .mkString("\n"))
-            onProtocolStep("mor-sentinel")
-            // 4–6. publish → ledger → ONE manifest delta commit (the
-            // reader-visible atom), shared verbatim with recovery
-            finishMorCommit(spark, fs, root, batchId, token,
-              dvPlanned, bPlanned)
+            commit(spark, fs, root, c, Some(cl), retiredM)
             // pre-warm the read side's victim cache (the
             // deleteClustered discipline) when this batch's DVs are
             // the generation's whole DV set
+            val dvPlanned = c.planned.filter(isDvName)
             if (dvLive.isEmpty && dvPlanned.nonEmpty)
               cacheDvFiles(root.toString, dvPlanned.sorted, morVictims)
             nTomb
@@ -1391,134 +1288,27 @@ object Zorder {
       }
     }
 
-  /** The publish → ledger → commit tail of a merge-on-read, shared by
-    * the live path and [[recoverMorCrash]] — every step is an
-    * idempotent set operation, so a crash at ANY point re-runs
-    * through recovery to the same state: staged files not yet
-    * published are renamed (already-published ones survive, their
-    * staged copies gone), the batch ledger entry is created if
-    * absent, the single delta commit adds exactly the planned names
-    * (a no-op if already committed), and the sentinel clears last. */
-  private def finishMorCommit(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      batchId: Long, token: String,
-      dvPlanned: Seq[String], bPlanned: Seq[String]): Unit = {
-    val dvTmp = new org.apache.hadoop.fs.Path(root, dvTmpDir)
-    val morTmp = new org.apache.hadoop.fs.Path(root, morTmpDir)
-    publishFlattened(fs, dvTmp, root, s"$dvPrefix$token-")
-    publishFlattened(fs, morTmp, root, s"b$batchId-m$token-")
-    (dvPlanned ++ bPlanned).foreach(n => require(
-      fs.exists(new org.apache.hadoop.fs.Path(root, n)),
-      s"mergeOnRead: planned file $n is neither staged nor published " +
-        "— foreign deletion mid-commit; resolve manually"))
-    onProtocolStep("mor-published")
-    val ledger = new org.apache.hadoop.fs.Path(root,
-      s"_graft_batches/$batchId")
-    if (!fs.exists(ledger)) {
-      fs.mkdirs(ledger.getParent)
-      fs.create(ledger, false).close()
-    }
-    onProtocolStep("mor-ledger")
-    val cl = clusteringOf(spark, root.toString)
-    val retiredA = readRetired(spark, root.toString).keySet
-    commitManifestDelta(spark, fs, root,
-      footerStats(spark, fs, root,
-        bPlanned.filterNot(retiredA), cl) ++
-        dvPlanned.map(_ -> "").toMap,
-      Set.empty, deferGc = retiredA.nonEmpty)
-    onProtocolStep("mor-manifest")
-    if (fs.exists(dvTmp)) fs.delete(dvTmp, true)
-    if (fs.exists(morTmp)) fs.delete(morTmp, true)
-    require(fs.delete(
-      new org.apache.hadoop.fs.Path(root, morCommittingFile), false),
-      s"mergeOnRead: could not clear the $morCommittingFile sentinel")
-    onProtocolStep("mor-done")
-  }
-
-  /** Recovery for [[mergeOnRead]]'s crash windows — run under the
-    * writer lease by every fold-family entry. Sentinel present → the
-    * batch committed writer-side: resume publish → ledger → commit
-    * with the RECORDED names ([[finishMorCommit]] — all idempotent).
-    * Stagings without a sentinel → a pre-commit crash: nothing
-    * durable happened, the stagings are discarded (`_graft_dv_tmp`
-    * doubles as [[deleteClustered]] staging and is swept by its own
-    * entry too). */
-  private def recoverMorCrash(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    val sentinel = new org.apache.hadoop.fs.Path(root, morCommittingFile)
-    if (fs.exists(sentinel)) {
-      val lines = Layout.readMarker(spark, root.toString,
-        morCommittingFile).get.split('\n').map(_.trim)
-      val header = lines.headOption.getOrElse("").split(' ')
-      require(header.length == 4 && header(0) == "v1" &&
-        header(1).matches("\\d{1,18}") && header(2).matches("\\d{1,9}") &&
-        header(3).matches("\\d{1,9}"),
-        s"mergeOnRead: unparseable $morCommittingFile sentinel at " +
-          s"$root — cannot tell the crashed commit's files apart; " +
-          "resolve manually")
-      val names = lines.drop(1).filter(_.nonEmpty)
-        .map(java.net.URLDecoder.decode(_, "UTF-8"))
-      val (nDv, nB) = (header(2).toInt, header(3).toInt)
-      require(names.length == nDv + nB,
-        s"mergeOnRead: $morCommittingFile sentinel at $root lists " +
-          s"${names.length} files but records $nDv+$nB — damaged; " +
-          "resolve manually (acting on a prefix would commit a " +
-          "partial batch)")
-      val dvPlanned = names.take(nDv).toSeq
-      val bPlanned = names.drop(nDv).toSeq
-      // the token is embedded in every planned name; recover it from
-      // either list (b names: b<id>-m<token>-…, dv names:
-      // dv-<token>-…)
-      val token = dvPlanned.headOption
-        .map(_.stripPrefix(dvPrefix).takeWhile(_ != '-'))
-        .orElse(bPlanned.headOption.map(
-          _.dropWhile(_ != 'm').drop(1).takeWhile(_ != '-')))
-        .getOrElse(sys.error(
-          s"mergeOnRead: $morCommittingFile sentinel at $root lists " +
-            "no files — damaged; resolve manually"))
-      finishMorCommit(spark, fs, root, header(1).toLong, token,
-        dvPlanned, bPlanned)
-    } else {
-      // pre-sentinel crash: nothing durable happened — both stagings
-      // are debris (under the lease a standing staging IS crashed;
-      // deleteClustered re-stages its own from scratch)
-      val morTmp = new org.apache.hadoop.fs.Path(root, morTmpDir)
-      if (fs.exists(morTmp)) require(fs.delete(morTmp, true),
-        s"mergeOnRead: could not clear stale staging $morTmp")
-      val dvTmp = new org.apache.hadoop.fs.Path(root, dvTmpDir)
-      if (fs.exists(dvTmp)) require(fs.delete(dvTmp, true),
-        s"mergeOnRead: could not clear stale staging $dvTmp")
-    }
-  }
-
-  /** The shared entry discipline of the tail-fold protocol family
-    * ([[compactTail]], [[mergeClustered]]): refuse under a crashed
-    * WHOLE compaction (its sentinel describes a full-generation swap
-    * this form must not half-finish), recover any crashed tail fold,
-    * roll back crashed unledgered appends, and enumerate the fold
-    * universe — retired files (a previous retention compact's grace)
-    * are OUT entirely: not residents (their rows are old-generation
-    * duplicates), not invariant inputs, not blockers. */
-  private def tailFoldPreamble(spark: SparkSession, path: String,
+  /** The shared entry discipline of the fold family ([[compactTail]],
+    * [[mergeClustered]], [[deleteClustered]], [[mergeOnRead]]): recover
+    * any crashed rewrite ([[recoverCommit]]), roll back crashed
+    * unledgered appends, and enumerate the fold universe — retired
+    * files (a previous retention compact's grace) are OUT entirely:
+    * not residents (their rows are old-generation duplicates), not
+    * invariant inputs, not blockers. */
+  private[graft] def tailFoldPreamble(spark: SparkSession, path: String,
       what: String, retainMs: Long): (org.apache.hadoop.fs.FileSystem,
       org.apache.hadoop.fs.Path, Clustering, Map[String, Long],
       Seq[org.apache.hadoop.fs.FileStatus],
       Seq[org.apache.hadoop.fs.FileStatus]) = {
     // a negative retainMs would behave as "no grace" live but be
-    // written verbatim into the v2 sentinel, whose recovery header
+    // written verbatim into the commit record, whose recovery header
     // check (\d{1,18}) then refuses — one crash would brick every
-    // compaction path until a human cleared the sentinel
+    // rewrite path until a human cleared the record
     require(retainMs >= 0, s"$what: retainMs must be >= 0, got $retainMs")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = fs.makeQualified(new org.apache.hadoop.fs.Path(path))
-    require(Layout.readMarker(spark, path, compactingFile).isEmpty,
-      s"$what: $path carries a $compactingFile sentinel — run " +
-        "compactClustered (it recovers the crashed whole-layout swap, " +
-        "then compacts)")
-    recoverTailCrash(spark, fs, root)
-    recoverMorCrash(spark, fs, root)
+    recoverCommit(spark, fs, root)
     Layout.rollbackUnledgered(spark, path)
     val cl = clusteringOf(spark, path).getOrElse(sys.error(
       s"$what: no $markerFile marker at $path — not a clustered " +
@@ -1702,20 +1492,19 @@ object Zorder {
     * share: select the fold set by VALUE-level containment (all tails
     * + every main whose z-interval holds a probe value), rewrite
     * `transform(foldDf)` through the region-split staged swap, and
-    * publish under the tail-fold crash protocol (sentinel → publish →
-    * manifest flip → delete-or-retire). `extraProbe` adds rows whose
+    * publish under the commit protocol (record → publish → manifest
+    * flip → delete-or-retire). `extraProbe` adds rows whose
     * clustering values must be covered beyond the tail's (a merge's
     * change rows); `transform` receives the fold frame (None when the
     * probe touched no file — a pure gap insert) and returns the rows
     * to publish in the fold set's place. */
-  private def foldAndPublish(spark: SparkSession, path: String,
+  private[graft] def foldAndPublish(spark: SparkSession, path: String,
       fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
       cl: Clustering, retainMs: Long, retiredM: Map[String, Long],
       tails: Seq[org.apache.hadoop.fs.FileStatus],
       mains: Seq[org.apache.hadoop.fs.FileStatus],
       extraProbe: Option[DataFrame],
       transform: Option[DataFrame] => DataFrame): Unit = {
-    val retired0 = retiredM.keySet
     val files = tails ++ mains
     locally {
       val ivs = residentIvs(spark, path, cl, files, mains)
@@ -1779,7 +1568,7 @@ object Zorder {
         else math.max(1L, foldBytes / cl.numFiles)
       val k = math.max(1, math.min(cl.numFiles,
         math.round(foldBytes.toDouble / meanMain).toInt))
-      val tmp = new org.apache.hadoop.fs.Path(root, tailTmpDir)
+      val tmp = stagedDir(root, "t")
       // fold inputs apply the generation's deletion vectors: a fold
       // over a DV'd file MATERIALIZES the tombstones (the rewritten
       // rows exclude deleted positions), and the dead DV records —
@@ -1793,6 +1582,7 @@ object Zorder {
             .parquet(foldSet.map(_.getPath.toString): _*), dvNames)
           .drop(zColName))
       val rewritten = transform(foldDf)
+      requireNoReservedZ(rewritten.columns, "compactTail: transform output")
       require(!rewritten.columns.contains(regionCol),
         s"compactTail: input already carries a $regionCol column — a " +
           "leaked stage column from a crashed tail compact; drop it first")
@@ -1849,43 +1639,13 @@ object Zorder {
             .write.mode("overwrite").parquet(tmp.toString)
         }
       onProtocolStep("tail-staged")
-      // commit point: the sentinel records the token AND the fold set
-      // (a partial fold's victims are not recoverable by name pattern
-      // the way the whole-compact's "everything but the token" is).
-      // Written ATOMICALLY with a length-checked header — a torn list
-      // would make recovery delete only SOME victims while publishing
-      // ALL replacements, silently duplicating the unlisted files'
-      // rows (the whole-compact sentinel is torn-safe by construction,
-      // any token prefix being used self-consistently; a list is not).
-      // v2 adds the caller's retainMs to the header so a crashed fold
-      // keeps its reader grace: recovery retires (not deletes) the
-      // victims when the crashed call asked for retention
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      Layout.writeMarkerAtomic(spark, path, tailCompactingFile,
-        (s"v2 $token ${foldSet.length} $retainMs" +: foldSet.map(st =>
-          java.net.URLEncoder.encode(st.getPath.getName, "UTF-8")))
-          .mkString("\n"))
-      onProtocolStep("tail-sentinel")
-      // publish-new → flip-manifest → delete-old (the whole-compact
-      // discipline): the root transiently holds fold files AND their
-      // replacements, but the manifest points at exactly one complete
-      // generation at every step
-      publishFlattened(fs, tmp, root, s"t$token-")
-      onProtocolStep("tail-published")
-      val replacements = listDataFiles(fs, root)
-        .filter(_.getPath.getName.startsWith(s"t$token-"))
-      commitManifestDelta(spark, fs, root,
-        footerStats(spark, fs, root,
-          replacements.map(_.getPath.getName), Some(cl)),
-        foldNames, deferGc = retainMs > 0 || retired0.nonEmpty)
-      onProtocolStep("tail-manifest")
-      retireOrDelete(spark, fs, root, foldSet, retainMs, retiredM)
-      onProtocolStep("tail-swept")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      require(fs.delete(
-        new org.apache.hadoop.fs.Path(root, tailCompactingFile), false),
-        s"compactTail: could not clear the sentinel after publish")
-      onProtocolStep("tail-done")
+      // the record lists the fold set: a partial fold's victims are not
+      // recoverable by name pattern the way the whole compact's
+      // "everything live before the fold" is
+      val token = newToken()
+      commit(spark, fs, root, planCommit(fs, root, "tail", token,
+        Seq("t" -> s"t$token-"), foldSet.map(_.getPath.getName), retainMs,
+        batchId = None, base = false), Some(cl), retiredM)
       // prune the z-range cache: untouched entries kept, folded ones
       // dropped. Replacement ranges are NOT captured here — the next
       // fold's residentIvs serves its misses from the replacements'
@@ -2016,125 +1776,214 @@ object Zorder {
     dvDebt(spark, path) >= maxDebt
   }
 
-  /** Recovery for [[compactTail]]'s crash windows — run under the
-    * writer lease by BOTH compact forms before they start. Sentinel
-    * present → the fold committed: delete any still-present listed
-    * fold files, publish whatever is still staged under the recorded
-    * token (files already published survive — their staged copies are
-    * gone), drop staging and the sentinel. Staging without a sentinel
-    * → a pre-commit crash: the layout is untouched, discard staging.
-    * Retention note: a v2 sentinel records the crashed call's
-    * retainMs, so recovery RETIRES the listed fold files under the
-    * same grace the live path would have given them — a crash no
-    * longer degrades reader grace. Legacy v1 sentinels (no retainMs
-    * field) recover with delete, the pre-v2 behavior. */
-  private def recoverTailCrash(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    val sentinel = new org.apache.hadoop.fs.Path(root, tailCompactingFile)
-    val tmp = new org.apache.hadoop.fs.Path(root, tailTmpDir)
-    // a pre-rename crash of the atomic sentinel write leaves a hidden
-    // temp; it can ONLY coexist with the staging dir (the temp is
-    // created while staging stands, and staging is dropped only after
-    // the rename succeeded), so the sweep lives in the crash arms —
-    // the steady no-crash path pays no extra directory listing
-    // the sweep runs FIRST in each arm — after the arm's own deletes a
-    // crash would leave the temp with neither sentinel nor staging,
-    // a state no later call re-enters, and the temp would leak forever
-    def sweepSentinelTemps(): Unit =
-      fs.listStatus(root).foreach { st =>
-        if (!st.isDirectory &&
-            st.getPath.getName.startsWith(tailCompactingFile + ".tmp."))
-          fs.delete(st.getPath, false)
-      }
-    if (fs.exists(sentinel)) {
-      sweepSentinelTemps()
-      val lines = Layout.readMarker(spark, root.toString, tailCompactingFile)
-        .get.split('\n').map(_.trim)
-      // the header's recorded length re-verifies list integrity (the
-      // atomic write makes a torn sentinel unreachable, and the v1
-      // header is the only format any released writer ever stamped;
-      // this is the second line of defense for a hand-damaged or
-      // foreign file — acting on a PARTIAL fold list would duplicate
-      // the rows of every unlisted victim). The count must parse as a
-      // bounded integer INSIDE the guard, or a mangled field would
-      // escape as a bare NumberFormatException without the
-      // resolve-manually context.
-      val header = lines.headOption.getOrElse("").split(' ')
-      require(((header.length == 3 && header(0) == "v1") ||
-        (header.length == 4 && header(0) == "v2" &&
-          header(3).matches("\\d{1,18}"))) &&
-        header(1).nonEmpty && header(2).matches("\\d{1,9}"),
-        s"compactTail: unparseable $tailCompactingFile sentinel at " +
-          s"$root — cannot tell the crashed fold's files apart; " +
-          "resolve manually")
-      val token = header(1)
-      // v1 (pre-grace) sentinels recover with delete; v2 carries the
-      // crashed call's retainMs so grace survives the crash
-      val retainMs = if (header.length == 4) header(3).toLong else 0L
-      val names = lines.drop(1).filter(_.nonEmpty)
-      require(names.length == header(2).toInt,
-        s"compactTail: $tailCompactingFile sentinel at $root lists " +
-          s"${names.length} files but records ${header(2)} — a torn " +
-          "or damaged fold list; resolve manually (acting on a prefix " +
-          "would duplicate the unlisted files' rows)")
-      // publish → flip manifest → delete, the same reader-safe order
-      // as the live fold: every recovery step resolves to a complete
-      // generation (idempotent at every crash point — the fold-name
-      // subtraction and the replacement addition are set operations)
-      publishFlattened(fs, tmp, root, s"t$token-")
-      val foldNames = names.map(java.net.URLDecoder.decode(_, "UTF-8")).toSet
-      val retiredM = readRetired(spark, root.toString)
-      commitManifestDelta(spark, fs, root,
-        footerStats(spark, fs, root,
-          listDataFiles(fs, root).map(_.getPath.getName)
-            .filter(_.startsWith(s"t$token-")),
-          clusteringOf(spark, root.toString)),
-        foldNames,
-        deferGc = retainMs > 0 || retiredM.nonEmpty)
-      // only fold files still on disk enter the sweep: a crash mid-
-      // sweep leaves a subset, and retiring a vanished name would put
-      // a phantom entry in the ledger (vacuum would drop it, but the
-      // ledger should never name a file that is not there)
-      val surviving = foldNames.toSeq.sorted
-        .map(n => new org.apache.hadoop.fs.Path(root, n))
-        .filter(fs.exists).map(fs.getFileStatus)
-      retireOrDelete(spark, fs, root, surviving, retainMs, retiredM)
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      require(fs.delete(sentinel, false),
-        s"compactTail: could not clear $sentinel after recovery")
-    } else if (fs.exists(tmp)) {
-      sweepSentinelTemps()
-      require(fs.delete(tmp, true),
-        s"compactTail: could not clear stale staging $tmp")
+  // ----- the commit protocol every clustered rewrite shares -----
+  //
+  // A rewrite (whole compact, tail fold or merge, merge-on-read) stages
+  // its new files under ONE hidden staging dir, writes ONE commit
+  // record — the writer-side commit point — and runs ONE routine
+  // ([[finishCommit]]): publish → ledger → manifest commit (the
+  // reader-side commit point) → retire or delete → clear. Recovery
+  // ([[recoverCommit]], run under the writer lease by every rewrite
+  // entry) is one rule: a standing record rolls forward through the
+  // same routine; staging without a record is pre-commit debris and is
+  // discarded. Every step is idempotent — published files are gone
+  // from staging, the ledger create and the manifest commit are set
+  // operations, the sweep skips what is gone or already retired — so
+  // a crash inside recovery recovers the same way.
+
+  private[graft] val commitFile = "_graft_commit"
+  private[graft] val stagingDir = "_graft_commit_tmp"
+
+  /** One rewrite's commit record. `verb` prefixes the protocol-step
+    * labels ("whole", "tail", "mor"); `staged` maps each staging subdir
+    * to the prefix its files publish under; `planned` are the published
+    * names the manifest commit adds; `retire` the names it removes,
+    * retired under `retainMs` grace or deleted; `batchId` the ledger
+    * entry to create; `base` stamps a full base manifest instead of a
+    * delta. */
+  private[graft] final case class Commit(verb: String, token: String,
+      staged: Seq[(String, String)], planned: Seq[String],
+      retire: Seq[String], retainMs: Long, batchId: Option[Long],
+      base: Boolean) {
+    /** A header, then one url-encoded line per staged subdir and per
+      * listed name; the header's counts make a torn list detectable. */
+    def encode: String = {
+      def enc(n: String) = java.net.URLEncoder.encode(n, "UTF-8")
+      val header = s"v1 $verb $token $retainMs ${batchId.getOrElse(-1L)} " +
+        s"${if (base) "base" else "delta"} ${staged.length} " +
+        s"${planned.length} ${retire.length}"
+      (header +: (staged.map { case (d, p) => s"${enc(d)} ${enc(p)}" } ++
+          (planned ++ retire).map(enc))).mkString("\n")
     }
   }
 
-  /** Move every staged data file into the layout root under `prefix`,
-    * FLATTENING partition directories into the name (the tail staging
-    * is `graftzregion=N/part-…`; the layout is a flat directory) —
-    * `t<token>-<N>-part-…`. Deterministic, so a crashed publish
-    * resumes with the same destination names. No-op when staging is
-    * absent (a recovery that already published). */
-  private def publishFlattened(fs: org.apache.hadoop.fs.FileSystem,
-      stagingRoot: org.apache.hadoop.fs.Path,
-      layoutRoot: org.apache.hadoop.fs.Path, prefix: String): Unit = {
-    def walk(d: org.apache.hadoop.fs.Path, tag: String): Unit =
-      fs.listStatus(d).foreach { st =>
+  /** The record at `root`, or None. A damaged one refuses loudly:
+    * acting on a partial list would duplicate or lose rows. */
+  private[graft] def readCommit(spark: SparkSession,
+      root: org.apache.hadoop.fs.Path): Option[Commit] =
+    Layout.readMarker(spark, root.toString, commitFile).map { payload =>
+      def damaged(why: String): Nothing = throw new IllegalArgumentException(
+        s"unusable $commitFile record at $root ($why) — cannot tell the " +
+          "crashed rewrite's files apart; resolve manually (acting on a " +
+          "partial list would duplicate or lose rows)")
+      def dec(n: String) = java.net.URLDecoder.decode(n, "UTF-8")
+      val lines = payload.split('\n').toSeq.filter(_.nonEmpty)
+      val h = lines.headOption.getOrElse("").split(' ').toSeq
+      if (!(h.length == 9 && h(0) == "v1" && h(1).matches("[a-z]+") &&
+          h(2).matches("[A-Za-z0-9-]+") && h(3).matches("\\d{1,18}") &&
+          h(4).matches("-1|\\d{1,18}") && Set("base", "delta")(h(5)) &&
+          h.drop(6).forall(_.matches("\\d{1,9}"))))
+        damaged("unparseable header")
+      val Seq(nS, nP, nR) = h.drop(6).map(_.toInt)
+      val body = lines.drop(1)
+      if (body.length != nS + nP + nR)
+        damaged(s"lists ${body.length} lines but records $nS+$nP+$nR — " +
+          "a torn or damaged list")
+      Commit(h(1), h(2),
+        body.take(nS).map(_.split(' ') match {
+          case Array(d, p) => dec(d) -> dec(p)
+          case _ => damaged("bad staging line")
+        }),
+        body.slice(nS, nS + nP).map(dec), body.drop(nS + nP).map(dec),
+        h(3).toLong, Some(h(4).toLong).filter(_ >= 0), h(5) == "base")
+    }
+
+  private def newToken(): String = java.util.UUID.randomUUID.toString.take(8)
+
+  private def stagedDir(root: org.apache.hadoop.fs.Path,
+      sub: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(root,
+      stagingDir), sub)
+
+  /** (staged file, published name) for every data file under the
+    * staging subdir `sub`, FLATTENING partition directories into the
+    * name (the tail staging is `graftzregion=N/part-…`; the layout is a
+    * flat directory) — `<prefix><N>-part-…`. Deterministic, so a
+    * crashed publish resumes with the same names; empty once
+    * everything is published, or when nothing was staged. */
+  private def stagedFiles(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path, sub: String,
+      prefix: String): Seq[(org.apache.hadoop.fs.Path, String)] = {
+    def walk(d: org.apache.hadoop.fs.Path,
+        tag: String): Seq[(org.apache.hadoop.fs.Path, String)] =
+      fs.listStatus(d).toSeq.sortBy(_.getPath.getName).flatMap { st =>
         val name = st.getPath.getName
-        if (st.isDirectory) {
-          if (!Layout.isHidden(name))
-            walk(st.getPath, tag +
-              name.substring(name.indexOf('=') + 1)
-                .replaceAll("[^A-Za-z0-9]", "") + "-")
-        } else if (!Layout.isHidden(name)) {
-          val dest = new org.apache.hadoop.fs.Path(layoutRoot,
-            prefix + tag + name)
-          require(fs.rename(st.getPath, dest),
-            s"compactTail: rename ${st.getPath} -> $dest failed")
-        }
+        if (Layout.isHidden(name)) Nil
+        else if (st.isDirectory) walk(st.getPath, tag +
+          name.substring(name.indexOf('=') + 1)
+            .replaceAll("[^A-Za-z0-9]", "") + "-")
+        else Seq(st.getPath -> (prefix + tag + name))
       }
-    if (fs.exists(stagingRoot)) walk(stagingRoot, "")
+    try walk(stagedDir(root, sub), "")
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  /** Move the staged files of `sub` to their published names in the
+    * root; returns those names. */
+  private def publish(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path, sub: String, prefix: String): Seq[String] =
+    stagedFiles(fs, root, sub, prefix).map { case (src, n) =>
+      val dest = new org.apache.hadoop.fs.Path(root, n)
+      require(fs.rename(src, dest), s"publish: rename $src -> $dest failed")
+      n
+    }
+
+  /** The record for what is staged now: each subdir's files, planned
+    * under its prefix. */
+  private[graft] def planCommit(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path, verb: String, token: String,
+      staged: Seq[(String, String)], retire: Seq[String], retainMs: Long,
+      batchId: Option[Long], base: Boolean): Commit =
+    Commit(verb, token, staged, staged.flatMap { case (d, p) =>
+      stagedFiles(fs, root, d, p).map(_._2) }, retire, retainMs, batchId,
+      base)
+
+  /** Write the record — the writer-side commit point. Atomic (temp +
+    * rename), so a torn list is unreachable by any crash. */
+  private[graft] def recordCommit(spark: SparkSession,
+      root: org.apache.hadoop.fs.Path, c: Commit): Unit = {
+    Layout.writeMarkerAtomic(spark, root.toString, commitFile, c.encode)
+    onProtocolStep(s"${c.verb}-sentinel")
+  }
+
+  private def commit(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
+      c: Commit, cl: Option[Clustering], retired: Map[String, Long]): Unit = {
+    recordCommit(spark, root, c)
+    finishCommit(spark, fs, root, c, cl, retired)
+  }
+
+  /** Everything after the commit point, shared verbatim by the live
+    * path and recovery: publish the staged files, create the ledger
+    * entry, commit the manifest (base or delta), retire or delete the
+    * listed files, clear staging, then the record. `retired` is the
+    * retire ledger as it stands. */
+  private def finishCommit(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
+      c: Commit, cl: Option[Clustering], retired: Map[String, Long]): Unit = {
+    c.staged.foreach { case (d, p) => publish(fs, root, d, p) }
+    val onDisk = listDataFiles(fs, root).map(st => st.getPath.getName -> st).toMap
+    c.planned.foreach(n => require(onDisk.contains(n),
+      s"$commitFile: planned file $n at $root is neither staged nor " +
+        "published — foreign deletion mid-commit; resolve manually"))
+    onProtocolStep(s"${c.verb}-published")
+    c.batchId.foreach { id =>
+      val ledger = new org.apache.hadoop.fs.Path(root, s"_graft_batches/$id")
+      if (!fs.exists(ledger)) {
+        fs.mkdirs(ledger.getParent)
+        fs.create(ledger, false).close()
+      }
+      onProtocolStep(s"${c.verb}-ledger")
+    }
+    // a retired name stays out of the generation (a retention fold's
+    // victim is still on disk, its rows live in the replacements)
+    val added = c.planned.filterNot(retired.contains)
+    val entries = footerStats(spark, fs, root, added.filterNot(isDvName), cl) ++
+      added.filter(isDvName).map(_ -> "")
+    val deferGc = c.retainMs > 0 || retired.nonEmpty
+    if (c.base) stampManifest(spark, fs, root, entries, deferGc = deferGc)
+    else commitManifestDelta(spark, fs, root, entries, c.retire.toSet, deferGc)
+    onProtocolStep(s"${c.verb}-manifest")
+    // only listed files still on disk and not yet retired enter the
+    // sweep: a crash mid-sweep leaves a subset, and re-retiring would
+    // restart a grace or put a phantom entry in the ledger
+    retireOrDelete(spark, fs, root,
+      c.retire.filterNot(retired.contains).flatMap(onDisk.get), c.retainMs,
+      retired)
+    onProtocolStep(s"${c.verb}-swept")
+    fs.delete(new org.apache.hadoop.fs.Path(root, stagingDir), true)
+    require(fs.delete(new org.apache.hadoop.fs.Path(root, commitFile), false),
+      s"could not clear the $commitFile record at $root")
+    onProtocolStep(s"${c.verb}-done")
+  }
+
+  /** The one recovery rule, run under the writer lease by every
+    * rewrite entry before it starts: a standing record rolls forward
+    * ([[finishCommit]]); staging without a record is a pre-commit crash
+    * and is discarded — the layout never saw it. */
+  private def recoverCommit(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Unit = {
+    val staging = new org.apache.hadoop.fs.Path(root, stagingDir)
+    // a crash inside the record's atomic write leaves a hidden temp,
+    // which can only coexist with staging or the record — so the sweep
+    // lives in the crash arms (the no-crash path pays no listing), and
+    // runs FIRST in each: after the arm's own deletes a crash would
+    // leave a temp no later call re-enters
+    def sweepRecordTemps(): Unit = fs.listStatus(root).foreach { st =>
+      if (!st.isDirectory && st.getPath.getName.startsWith(commitFile + ".tmp."))
+        fs.delete(st.getPath, false)
+    }
+    readCommit(spark, root) match {
+      case Some(c) =>
+        sweepRecordTemps()
+        finishCommit(spark, fs, root, c, clusteringOf(spark, root.toString),
+          readRetired(spark, root.toString))
+      case None if fs.exists(staging) =>
+        sweepRecordTemps()
+        require(fs.delete(staging, true), s"could not clear stale staging $staging")
+      case None => ()
+    }
   }
 
   /** The layout's published data files — clustered layouts are FLAT
@@ -2662,9 +2511,12 @@ object Zorder {
             // past it simply never prune (conservative keep). Nested
             // leaves (dotted paths) are excluded: their Spark-side
             // box spelling is ambiguous.
+            // The materialized curve column is layout-internal: never a
+            // reader-facing stat.
             val inFooter = blocks.headOption.map(_.getColumns.asScala
               .toSeq.map(_.getPath.toDotString)
-              .filter(!_.contains("."))).getOrElse(Seq.empty)
+              .filter(n => !n.contains(".") && n != zColName))
+              .getOrElse(Seq.empty)
             val leaves = (c.cols.map(_.name).filter(inFooter.contains)
               ++ inFooter.filterNot(c.cols.map(_.name).contains))
               .distinct.take(statsColumnCap)
@@ -3124,9 +2976,9 @@ object Zorder {
     // are UNMANIFESTED — the self-heal arm below would stamp them into
     // the ledger, and after recovery flips them live, the next fold
     // would exclude them as "retired" and REWRITE THE LAYOUT WITHOUT
-    // THEIR ROWS. Refuse under either sentinel (the appendClustered
-    // discipline): under the lease a standing sentinel is crashed, and
-    // the compact forms recover it
+    // THEIR ROWS. Refuse under a commit record (the appendClustered
+    // discipline): under the lease a standing record is crashed, and
+    // every rewrite entry recovers it
     requireNotCompacting(spark, path, "vacuumClustered")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -3388,7 +3240,10 @@ object Zorder {
       fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
       dataNames: Seq[String], dvNames: Seq[String]): DataFrame = {
     // raw scans internally (the anti-join reads _metadata off them);
-    // the curve column is dropped ONCE from the final frame below
+    // the curve column is dropped from each branch BEFORE the strict
+    // union — without a declared schema each branch infers from its own
+    // footers, and a layout mixing files with and without the column
+    // would give the two branches different column sets
     def declared(ns: Seq[String]): DataFrame =
       readDeclaredRaw(spark, fs, root, ns.map(n =>
         new org.apache.hadoop.fs.Path(root, n).toString))
@@ -3405,12 +3260,11 @@ object Zorder {
         v
       })
       val (dvd, clean) = dataNames.partition(victims)
-      (if (dvd.isEmpty) declared(dataNames) // only dead tombstones
-      else if (clean.isEmpty)
-        applyDvs(spark, fs, root, declared(dataNames), dvNames)
-      else declared(clean).unionByName(
-        applyDvs(spark, fs, root, declared(dvd), dvNames)))
-        .drop(zColName)
+      def dvApplied(ns: Seq[String]): DataFrame =
+        applyDvs(spark, fs, root, declared(ns), dvNames).drop(zColName)
+      if (dvd.isEmpty) declared(dataNames).drop(zColName) // dead tombstones
+      else if (clean.isEmpty) dvApplied(dataNames)
+      else declared(clean).drop(zColName).unionByName(dvApplied(dvd))
     }
   }
 
@@ -3761,22 +3615,22 @@ object Zorder {
   def clusteringOf(spark: SparkSession, path: String): Option[Clustering] =
     Layout.readMarker(spark, path, markerFile).map(parsePayload)
 
+  /** Refuse while a rewrite's commit record stands: in flight, or
+    * crashed past its commit point (under the lease, crashed). */
   private def requireNotCompacting(spark: SparkSession, path: String,
-      what: String): Unit = {
-    require(Layout.readMarker(spark, path, compactingFile).isEmpty,
-      s"$what: $path carries a $compactingFile sentinel — a compaction " +
-        "is in flight or crashed mid-swap; run compactClustered (it " +
-        "recovers, then compacts) before appending")
-    require(Layout.readMarker(spark, path, tailCompactingFile).isEmpty,
-      s"$what: $path carries a $tailCompactingFile sentinel — a tail " +
-        "compaction is in flight or crashed mid-swap; run compactTail " +
-        "or compactClustered (both recover it) before appending")
-    require(Layout.readMarker(spark, path, morCommittingFile).isEmpty,
-      s"$what: $path carries a $morCommittingFile sentinel — a " +
-        "merge-on-read is in flight or crashed mid-commit; run any " +
-        "fold-family form (mergeOnRead, compactTail, compactClustered, " +
-        "deleteClustered — all recover it) first")
-  }
+      what: String): Unit =
+    Layout.readMarker(spark, path, commitFile).foreach { rec =>
+      val kind = rec.split("[ \n]").lift(1) match {
+        case Some("whole") => "compaction"
+        case Some("tail") => "tail compaction or merge"
+        case Some("mor") => "merge-on-read"
+        case _ => "rewrite"
+      }
+      require(false, s"$what: $path carries a $commitFile record — a " +
+        s"$kind is in flight or crashed mid-commit; run compactClustered, " +
+        "compactTail, mergeClustered, mergeOnRead or deleteClustered " +
+        "(each recovers it) first")
+    }
 
   // ----- marker payload (bit-exact, versioned, human-inspectable) -----
 

@@ -27,19 +27,23 @@ object Tables {
     * deployment declares table schemas once in a catalog; this cache
     * is that declaration, keyed by path. */
   private val schemaCache = new scala.collection.concurrent.TrieMap[
-    (String, Long, Long), org.apache.spark.sql.types.StructType]
+    (String, Long, Long, String), org.apache.spark.sql.types.StructType]
 
   def load(spark: SparkSession, dir: String, table: String): DataFrame = {
     val path = s"$dir/$table.parquet"
     // cache key carries the file's (mtime, length) identity: test data
     // regenerated in-process (a different events.ts vintage, say) must
     // re-infer, or the stale schema would mis-dispatch the ts
-    // normalization below — one FS stat per load buys that safety
+    // normalization below — one FS stat per load buys that safety. The
+    // session's nanosAsLong conf is part of the key too: it decides
+    // whether a TIMESTAMP(NANOS) column infers as a long, and the cache
+    // outlives any one session.
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val st = fs.getFileStatus(hp)
     val schema = schemaCache.getOrElseUpdate(
-      (path, st.getModificationTime, st.getLen),
+      (path, st.getModificationTime, st.getLen,
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")),
       spark.read.parquet(path).schema)
     val df = spark.read.schema(schema).parquet(path)
     // events.ts has shipped as parquet TIMESTAMP(NANOS) (reads as long

@@ -49,4 +49,40 @@ class TablesVintageSpec extends SparkSpec {
     assert(a == micros, s"nanos vintage must truncate to $micros, got $a")
     assert(b == micros, s"NTZ vintage must preserve $micros, got $b")
   }
+
+  test("the schema cache follows the session's nanosAsLong conf") {
+    // a real parquet TIMESTAMP(NANOS) column: it infers as a long only
+    // under spark.sql.legacy.parquet.nanosAsLong, and is an illegal
+    // type otherwise — a schema cached under one setting must not be
+    // served under the other
+    val nanos = 1709296496789012345L
+    val dir = Files.createTempDirectory("graft_vintage_conf_").toString
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet/part-0.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration)
+      .build()
+    try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(
+      schema).newGroup().append("event_id", 1L).append("ts", nanos))
+    finally w.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "true")
+      val asLong = sources.Tables.load(spark, dir, "events")
+      assert(asLong.schema("ts").dataType == TimestampType)
+      val s = spark
+      import s.implicits._
+      assert(asLong.select(unix_micros(col("ts"))).as[Long].head() ==
+        nanos / 1000)
+      spark.conf.set(key, "false")
+      intercept[org.apache.spark.sql.AnalysisException](
+        sources.Tables.load(spark, dir, "events"))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

@@ -30,6 +30,22 @@ class ZorderSpec extends SparkSpec {
       sum(xxhash64(df.columns.map(col): _*).cast("decimal(38,0)")).as("ck"))
       .collect()(0)
 
+  /** The staging subdir `sub` of a layout's shared staging dir. */
+  private def staging(dir: String, sub: String): String =
+    s"$dir/${Zorder.stagingDir}/$sub"
+
+  /** Write a crashed rewrite's commit record over what a test staged
+    * under `sub`, exactly as the live path records it. */
+  private def recordCrash(dir: String, verb: String, token: String,
+      sub: String, prefix: String, retire: Seq[String],
+      base: Boolean): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(new org.apache.hadoop.fs.Path(dir))
+    Zorder.recordCommit(spark, root, Zorder.planCommit(fs, root, verb, token,
+      Seq(sub -> prefix), retire, retainMs = 0L, batchId = None, base = base))
+  }
+
   private def refMorton(xs: Seq[Long], bits: Int): Long = {
     val d = xs.length
     var z = 0L
@@ -622,19 +638,19 @@ class ZorderSpec extends SparkSpec {
     val e = sources.Tables.load(spark, sfDir, "events")
     val fs = new org.apache.hadoop.fs.Path("/")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // window 1: staging without a sentinel (pre-commit crash) — the
+    // window 1: staging without a record (pre-commit crash) — the
     // stale staging is discarded and the fresh fold proceeds
     val d1 = Files.createTempDirectory("graft_zorder_tw1_").toString
     Zorder.writeZordered(e.filter(col("user_id") >= 5), d1,
       Seq("user_id", "value"), bits = 8, numFiles = 4)
     Zorder.appendClustered(e.filter(col("user_id") < 5), d1, batchId = 1)
-    e.limit(3).write.parquet(s"$d1/_graft_tail_tmp")
+    e.limit(3).write.parquet(staging(d1, "t"))
     assert(Zorder.compactTail(spark, d1))
     assert(rawLayout(d1).count() == e.count(),
       "pre-commit staging must be discarded, not published")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(d1, "_graft_tail_tmp")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(d1, Zorder.stagingDir)))
 
-    // window 2: sentinel + staged fold + PARTIAL victim sweep — the
+    // window 2: record + staged fold + PARTIAL victim sweep — the
     // recovery must delete the remaining listed victims, publish the
     // staged generation under the recorded token, and end exact
     val d2 = Files.createTempDirectory("graft_zorder_tw2_").toString
@@ -646,17 +662,16 @@ class ZorderSpec extends SparkSpec {
       .filter(st => !st.isDirectory && st.getPath.getName.matches("b\\d+-.*"))
       .map(_.getPath).toSeq
     assert(tails.size >= 2, s"need >= 2 tail files, got ${tails.size}")
-    // stage the fold of exactly the tail rows, commit the sentinel
+    // stage the fold of exactly the tail rows, commit the record
     // listing them, then "crash" after deleting only ONE of them
     graft.operators.Zorder
       .curveValues(rawLayout(tails.map(_.toString): _*), cl2, "__z")
       .repartitionByRange(2, col("__z")).sortWithinPartitions(col("__z"))
-      .drop("__z").write.parquet(s"$d2/_graft_tail_tmp")
-    graft.operators.Layout.writeMarker(spark, d2, "_graft_tail_compacting",
-      (s"v1 tok42 ${tails.size}" +: tails.map(p =>
-        java.net.URLEncoder.encode(p.getName, "UTF-8"))).mkString("\n"))
+      .drop("__z").write.parquet(staging(d2, "t"))
+    recordCrash(d2, "tail", "tok42", "t", "ttok42-", tails.map(_.getName),
+      base = false)
     assert(fs.delete(tails.head, false))
-    // appends refuse while the sentinel stands
+    // appends refuse while the record stands
     val err = intercept[IllegalArgumentException](Zorder.appendClustered(
       e.filter(col("user_id") < 5), d2, batchId = 9))
     assert(err.getMessage.contains("tail"), err.getMessage)
@@ -673,24 +688,24 @@ class ZorderSpec extends SparkSpec {
     assert(names.exists(_.startsWith("ttok42-")),
       s"staged files must publish under the RECORDED token, got " +
         names.mkString(","))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(d2, "_graft_tail_compacting")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(d2, "_graft_tail_tmp")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(d2, Zorder.commitFile)))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(d2, Zorder.stagingDir)))
     // and compactClustered ALSO recovers a tail crash (both forms do)
     val d3 = Files.createTempDirectory("graft_zorder_tw3_").toString
     Zorder.writeZordered(e, d3, Seq("user_id", "value"), bits = 8,
       numFiles = 4)
-    e.limit(3).write.parquet(s"$d3/_graft_tail_tmp")
+    e.limit(3).write.parquet(staging(d3, "t"))
     Zorder.compactClustered(spark, d3)
     assert(rawLayout(d3).count() == e.count())
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(d3, "_graft_tail_tmp")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(d3, Zorder.stagingDir)))
 
     // a TORN/damaged fold list (count mismatch) must refuse loudly —
     // acting on a prefix would duplicate the unlisted victims' rows
     val d4 = Files.createTempDirectory("graft_zorder_tw4_").toString
     Zorder.writeZordered(e, d4, Seq("user_id", "value"), bits = 8,
       numFiles = 4)
-    graft.operators.Layout.writeMarker(spark, d4, "_graft_tail_compacting",
-      "v1 tokxx 3\nonlyonefile.parquet")
+    graft.operators.Layout.writeMarker(spark, d4, Zorder.commitFile,
+      "v1 tail tokxx 0 -1 delta 1 0 3\nt ttokxx-\nonlyonefile.parquet")
     val torn = intercept[IllegalArgumentException](
       Zorder.compactTail(spark, d4))
     assert(torn.getMessage.contains("torn") ||
@@ -798,18 +813,19 @@ class ZorderSpec extends SparkSpec {
     val bare = Files.createTempDirectory("graft_zorder_b_").toString
     e.limit(10).write.mode("overwrite").parquet(bare)
     intercept[RuntimeException](Zorder.appendClustered(e, bare, batchId = 0))
-    // clustered, but a compaction sentinel is present: refuse
+    // clustered, but a compaction record is present: refuse
     val dir = Files.createTempDirectory("graft_zorder_s_").toString
     Zorder.writeZordered(e, dir, Seq("user_id", "value"), bits = 8,
       numFiles = 4)
-    graft.operators.Layout.writeMarker(spark, dir, "_graft_compacting", "tok1")
+    graft.operators.Layout.writeMarker(spark, dir, Zorder.commitFile,
+      "v1 whole tok1 0 -1 base 0 0 0")
     val err2 = intercept[IllegalArgumentException](
       Zorder.appendClustered(e, dir, batchId = 0))
     assert(err2.getMessage.contains("compact"))
     // and a batch missing a clustered column fails with the column name
-    new org.apache.hadoop.fs.Path(dir, "_graft_compacting")
+    new org.apache.hadoop.fs.Path(dir, Zorder.commitFile)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(dir, "_graft_compacting"), false)
+      .delete(new org.apache.hadoop.fs.Path(dir, Zorder.commitFile), false)
     val err3 = intercept[IllegalArgumentException](
       Zorder.appendClustered(e.drop("value"), dir, batchId = 0))
     assert(err3.getMessage.contains("value"))
@@ -926,20 +942,20 @@ class ZorderSpec extends SparkSpec {
     val fsP = new org.apache.hadoop.fs.Path("/")
     val fs = fsP.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    // window 1: staging exists, NO sentinel (pre-commit crash) — the
+    // window 1: staging exists, NO record (pre-commit crash) — the
     // stale staging is discarded, the layout is untouched, and the
     // fresh compact then runs normally
     val d1 = Files.createTempDirectory("graft_zorder_c1_").toString
     Zorder.writeZordered(e, d1, Seq("user_id", "value"), bits = 8, numFiles = 4)
     Zorder.appendClustered(e.limit(50), d1, batchId = 1)
-    e.limit(3).write.parquet(s"$d1/_graft_compact_tmp")
+    e.limit(3).write.parquet(staging(d1, "c"))
     Zorder.compactClustered(spark, d1)
     val n1 = rawLayout(d1).count()
     assert(n1 == e.count() + 50,
       s"pre-commit staging must be discarded, not published (got $n1)")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(d1, "_graft_compact_tmp")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(d1, Zorder.stagingDir)))
 
-    // window 2: sentinel present, staging fully written, data files
+    // window 2: record present, staging fully written, data files
     // partially swept — recovery must finish the OLD generation
     // (publish the staged files under the recorded token), then the
     // fresh compact runs; rows end exactly = the staged generation's
@@ -951,22 +967,23 @@ class ZorderSpec extends SparkSpec {
     val gen = e.filter(col("event_id") % 7 =!= 0)
     graft.operators.Zorder.curveValues(gen, cl2, "__z")
       .repartitionByRange(4, col("__z")).sortWithinPartitions(col("__z"))
-      .drop("__z").write.parquet(s"$d2/_graft_compact_tmp")
-    graft.operators.Layout.writeMarker(spark, d2, "_graft_compacting", "tokx")
-    // partial sweep: delete ONE old data file, as step 3 would
-    val oldFile = fs.listStatus(new org.apache.hadoop.fs.Path(d2))
+      .drop("__z").write.parquet(staging(d2, "c"))
+    val old2 = fs.listStatus(new org.apache.hadoop.fs.Path(d2))
       .filter(st => !st.isDirectory &&
-        !graft.operators.Layout.isHidden(st.getPath.getName)).head.getPath
-    fs.delete(oldFile, false)
+        !graft.operators.Layout.isHidden(st.getPath.getName)).map(_.getPath)
+    recordCrash(d2, "whole", "tokx", "c", "ctokx-", old2.map(_.getName).toSeq,
+      base = true)
+    // partial sweep: delete ONE old data file, as step 5 would
+    fs.delete(old2.head, false)
     Zorder.compactClustered(spark, d2)
     val back2 = rawLayout(d2)
     assert(back2.count() == gen.count(),
       "recovery must complete the staged generation, then compact it")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(d2, "_graft_compacting")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(d2, "_graft_compact_tmp")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(d2, Zorder.commitFile)))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(d2, Zorder.stagingDir)))
     assert(disjoint(zRanges(d2)), "recovered layout must end fully clustered")
 
-    // window 3 (the publish-before-delete order): sentinel + staging
+    // window 3 (the publish-before-delete order): record + staging
     // + SOME c<token>- files already published — a mid-publish crash.
     // Both generations coexist on disk, the manifest still points at
     // the OLD one: a reader resolving BEFORE recovery must get the
@@ -980,10 +997,13 @@ class ZorderSpec extends SparkSpec {
     val gen3 = e.filter(col("event_id") % 3 =!= 0)
     graft.operators.Zorder.curveValues(gen3, cl3, "__z")
       .repartitionByRange(4, col("__z")).sortWithinPartitions(col("__z"))
-      .drop("__z").write.parquet(s"$d3/_graft_compact_tmp")
-    graft.operators.Layout.writeMarker(spark, d3, "_graft_compacting", "toky")
-    val staged3 = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$d3/_graft_compact_tmp"))
+      .drop("__z").write.parquet(staging(d3, "c"))
+    recordCrash(d3, "whole", "toky", "c", "ctoky-",
+      fs.listStatus(new org.apache.hadoop.fs.Path(d3))
+        .filter(st => !st.isDirectory &&
+          !graft.operators.Layout.isHidden(st.getPath.getName))
+        .map(_.getPath.getName).toSeq, base = true)
+    val staged3 = fs.listStatus(new org.apache.hadoop.fs.Path(staging(d3, "c")))
       .filter(st => !st.isDirectory &&
         !graft.operators.Layout.isHidden(st.getPath.getName))
     assert(staged3.length >= 2, "window needs >= 2 staged files")
@@ -1136,7 +1156,7 @@ class ZorderSpec extends SparkSpec {
       valid = Set(kBase, kB1)
       assert(Zorder.appendClustered(b1, dir, batchId = 1))
       assert(key(Zorder.readClustered(spark, dir)) == kB1)
-      // tail compact: rows constant through every step — sentinel,
+      // tail compact: rows constant through every step — record,
       // publish (both generations on disk), manifest flip, fold-file
       // sweep, cleanup
       valid = Set(kB1)
@@ -1167,7 +1187,7 @@ class ZorderSpec extends SparkSpec {
     assert(planStr.contains("GreaterThanOrEqual(user_id,2)"),
       s"manifest read lost filter pushdown:\n$planStr")
 
-    // a CRASHED tail fold (sentinel + staged + nothing deleted — the
+    // a CRASHED tail fold (record + staged + nothing deleted — the
     // window the old delete-then-publish order left torn) is readable-
     // consistent BEFORE anyone recovers it: the manifest still points
     // at the complete pre-fold generation
@@ -1183,16 +1203,15 @@ class ZorderSpec extends SparkSpec {
     graft.operators.Zorder
       .curveValues(rawLayout(tails.map(_.toString): _*), cl, "__z")
       .repartitionByRange(2, col("__z")).sortWithinPartitions(col("__z"))
-      .drop("__z").write.parquet(s"$dir/_graft_tail_tmp")
-    graft.operators.Layout.writeMarker(spark, dir, "_graft_tail_compacting",
-      (s"v1 tokrd ${tails.size}" +: tails.map(p =>
-        java.net.URLEncoder.encode(p.getName, "UTF-8"))).mkString("\n"))
+      .drop("__z").write.parquet(staging(dir, "t"))
+    recordCrash(dir, "tail", "tokrd", "t", "ttokrd-", tails.map(_.getName),
+      base = false)
     val kWith3 = key(e.unionByName(b3))
     assert(key(Zorder.readClustered(spark, dir)) == kWith3,
       "a crashed-mid-fold layout must still resolve the complete " +
         "pre-fold generation")
     assert(Zorder.compactTail(spark, dir) ||
-      !fs.exists(new org.apache.hadoop.fs.Path(dir, "_graft_tail_compacting")),
+      !fs.exists(new org.apache.hadoop.fs.Path(dir, Zorder.commitFile)),
       "recovery must clear the crashed fold")
     assert(key(Zorder.readClustered(spark, dir)) == kWith3,
       "recovery must preserve the row set exactly")
@@ -1259,16 +1278,15 @@ class ZorderSpec extends SparkSpec {
     assert(Zorder.readClustered(spark, dir).count() == e.count(),
       "a replay after a retention fold must not resurrect retired " +
         "batch files into the manifest")
-    // vacuum REFUSES under a compaction sentinel: a crashed swap's
+    // vacuum REFUSES under a commit record: a crashed swap's
     // published-but-unflipped replacements are unmanifested, and
     // stamping them as garbage would lose their rows after recovery
-    graft.operators.Layout.writeMarker(spark, dir,
-      "_graft_tail_compacting", "v1 tokvv 0")
+    graft.operators.Layout.writeMarker(spark, dir, Zorder.commitFile,
+      "v1 tail tokvv 0 -1 delta 0 0 0")
     val vErr = intercept[IllegalArgumentException](
       Zorder.vacuumClustered(spark, dir, olderThanMs = 0L))
     assert(vErr.getMessage.contains("compact"), vErr.getMessage)
-    fs.delete(new org.apache.hadoop.fs.Path(dir, "_graft_tail_compacting"),
-      false)
+    fs.delete(new org.apache.hadoop.fs.Path(dir, Zorder.commitFile), false)
     // a live grace window vacuums nothing
     assert(Zorder.vacuumClustered(spark, dir, olderThanMs = hour) == 0)
     assert(rawLayout(oldGen: _*).count() == preCount)
@@ -1457,7 +1475,7 @@ class ZorderSpec extends SparkSpec {
       "an uncommitted (orphan) DV must never be applied — deletes " +
         "live in the manifest, not the directory")
     // a stale staging dir from a pre-publish crash
-    fs.mkdirs(new org.apache.hadoop.fs.Path(root, "_graft_dv_tmp"))
+    fs.mkdirs(new org.apache.hadoop.fs.Path(staging(dir, "dv")))
     // the next delete call sweeps both debris forms, even when it
     // itself commits nothing
     assert(Zorder.deleteClustered(spark, dir,
@@ -1466,7 +1484,7 @@ class ZorderSpec extends SparkSpec {
       Seq("event_id")) == 0L)
     assert(!fs.exists(orphan), "the orphan DV is crash debris — swept")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(root,
-      "_graft_dv_tmp")), "stale DV staging is swept")
+      Zorder.stagingDir)), "stale DV staging is swept")
     assert(Zorder.readClustered(spark, dir).count() == count0)
   }
 
@@ -1596,7 +1614,7 @@ class ZorderSpec extends SparkSpec {
     assert(namesA.count(_.matches("b\\d+-.*")) == bBefore,
       "a pure-delete merge-on-read must publish no insert file")
     // negative batchId refuses BEFORE anything durable: it would
-    // escape the b\d+- tail classification and brick sentinel
+    // escape the b\d+- tail classification and brick record
     // recovery (\d{1,18} header check)
     val exNeg = intercept[IllegalArgumentException](
       Zorder.mergeOnRead(spark, dirA,
@@ -1635,16 +1653,16 @@ class ZorderSpec extends SparkSpec {
         Seq("event_id"), batchId = batch, deleteCol = Some("__del")))
       finally Zorder.onProtocolStep = _ => ()
     }
-    // window 1: both sides staged, NO sentinel — nothing durable;
+    // window 1: both sides staged, NO record — nothing durable;
     // readers see the old state and the replay redoes the batch
     crashAt("mor-staged", 2)
     assert(fp(Zorder.readClustered(spark, dir)) == before,
-      "a pre-sentinel crash must leave the exact old state visible")
+      "a pre-record crash must leave the exact old state visible")
     assert(Zorder.mergeOnRead(spark, dir, changes, Seq("event_id"),
       batchId = 2, deleteCol = Some("__del")) > 0L,
-      "the replay after a pre-sentinel crash redoes the batch")
+      "the replay after a pre-record crash redoes the batch")
     assert(fp(Zorder.readClustered(spark, dir)) == fp(expected))
-    // reset to a fresh layout for the post-sentinel windows
+    // reset to a fresh layout for the post-record windows
     val dir2 = Files.createTempDirectory("graft_zorder_morc2_").toString
     Zorder.writeHilbert(e.filter(col("event_id") % 7 =!= 0), dir2,
       Seq("user_id", "ts"), bits = 12, numFiles = 8)
@@ -1656,12 +1674,12 @@ class ZorderSpec extends SparkSpec {
         Seq("event_id"), batchId = 2, deleteCol = Some("__del")))
       finally Zorder.onProtocolStep = _ => ()
     }
-    // window 2: sentinel written, nothing published — readers still
-    // resolve the old generation; appends REFUSE under the sentinel;
+    // window 2: record written, nothing published — readers still
+    // resolve the old generation; appends REFUSE under the record;
     // any fold-family entry completes the batch
     crashAt2("mor-sentinel")
     assert(fp(Zorder.readClustered(spark, dir2)) == before,
-      "a post-sentinel pre-publish crash still serves the old state")
+      "a post-record pre-publish crash still serves the old state")
     val exApp = intercept[IllegalArgumentException](
       Zorder.appendClustered(e.limit(3), dir2, batchId = 9))
     assert(exApp.getMessage.contains("merge-on-read"), exApp.getMessage)
@@ -1670,7 +1688,7 @@ class ZorderSpec extends SparkSpec {
         .as("event_id"), col("user_id"), col("ts")),
       Seq("event_id")) == 0L) // any fold-family entry recovers first
     assert(fp(Zorder.readClustered(spark, dir2)) == fp(expected),
-      "recovery must complete the crashed batch from the sentinel")
+      "recovery must complete the crashed batch from the record")
     // the batch is ledgered by recovery: a replay is a pure no-op
     assert(Zorder.mergeOnRead(spark, dir2, changes, Seq("event_id"),
       batchId = 2, deleteCol = Some("__del")) == 0L,
@@ -1873,7 +1891,7 @@ class ZorderSpec extends SparkSpec {
     // their victim files by clustering-value containment (the
     // compactTail discipline), so a narrow change batch rewrites a
     // narrow file set; all tail files fold in as a side effect; the
-    // whole thing rides the tail-fold sentinel protocol, so a crash
+    // whole thing rides the tail-fold record protocol, so a crash
     // at the commit point recovers into the SAME merged state.
     val e = sources.Tables.load(spark, sfDir, "events")
     val cols = e.columns.toSeq
@@ -1979,7 +1997,7 @@ class ZorderSpec extends SparkSpec {
     assert(emptied.columns.toSet == e.columns.toSet,
       "the emptied generation must keep its schema readable")
 
-    // crash at the sentinel commit: the merge is committed — recovery
+    // crash at the record commit: the merge is committed — recovery
     // (via any tail-protocol entry) completes it into the same state
     val dir2 = Files.createTempDirectory("graft_zorder_mrgc_").toString
     Zorder.writeHilbert(e.filter(col("event_id") % 7 =!= 0), dir2,
@@ -2076,11 +2094,9 @@ class ZorderSpec extends SparkSpec {
   }
 
   test("a crashed retention fold keeps its grace: recovery retires, never deletes") {
-    // the v2 fold sentinel records the crashed call's retainMs, so the
+    // the commit record carries the crashed call's retainMs, so the
     // grace window is crash-proof: recovery retires the fold victims
-    // under the SAME grace the live path would have given them. A v1
-    // (pre-grace) sentinel still recovers with delete — the existing
-    // crash-window test covers that arm.
+    // under the SAME grace the live path would have given them.
     val e = sources.Tables.load(spark, sfDir, "events")
     val dir = Files.createTempDirectory("graft_zorder_gcr_").toString
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -2096,7 +2112,7 @@ class ZorderSpec extends SparkSpec {
       .map(n => new org.apache.hadoop.fs.Path(root, n).toString)
     val preCount = rawLayout(oldGen: _*).count()
     assert(preCount == e.count())
-    // crash the REAL code path right after the sentinel commit: the
+    // crash the REAL code path right after the record commit: the
     // widest recovery window (publish + manifest flip + sweep all
     // happen in recovery, where the grace used to be lost)
     val hour = 3600L * 1000
@@ -2104,21 +2120,17 @@ class ZorderSpec extends SparkSpec {
     Zorder.onProtocolStep = l => if (l == "tail-sentinel") throw Crash()
     try intercept[Crash](Zorder.compactTail(spark, dir, retainMs = hour))
     finally Zorder.onProtocolStep = _ => ()
-    assert(fs.exists(new org.apache.hadoop.fs.Path(dir,
-      "_graft_tail_compacting")))
-    // the sentinel must carry the v2 header with the caller's grace
-    val sentinelHead = graft.operators.Layout.readMarker(spark, dir,
-      "_graft_tail_compacting").get.split('\n').head.split(' ')
-    assert(sentinelHead(0) == "v2" && sentinelHead(3) == hour.toString,
-      s"fold sentinel must record retainMs, got " +
-        sentinelHead.mkString(" "))
+    // the record must carry the caller's grace
+    val rec = Zorder.readCommit(spark, root)
+    assert(rec.exists(_.retainMs == hour),
+      s"the commit record must record retainMs, got $rec")
     // recovery (via a fresh compact, itself WITHOUT grace — the
-    // sentinel's recorded retainMs governs) retires the victims
+    // record's recorded retainMs governs) retires the victims
     assert(!Zorder.compactTail(spark, dir),
       "after recovery there is no tail left to fold")
     val retired = Zorder.readRetired(spark, dir)
     assert(retired.nonEmpty,
-      "recovery of a v2 sentinel must RETIRE the fold victims")
+      "recovery of the record must RETIRE the fold victims")
     retired.keys.foreach(n => assert(
       fs.exists(new org.apache.hadoop.fs.Path(root, n)),
       s"retired victim $n must survive on disk through the grace"))
@@ -2300,5 +2312,79 @@ class ZorderSpec extends SparkSpec {
       s"a vacuumed pin must refuse at resolve time, got: ${exV.getMessage}")
     assert(k(Zorder.readClustered(spark, dir)) == k(e),
       "the current read must survive the history cut")
+  }
+
+  test("a layout mixing files with and without the curve column reads through a deletion vector") {
+    // a bootstrap rewritten without the materialized curve column (the
+    // pre-curve-column file vintage), one batch appended with it, and
+    // a delete whose keys live only in that batch: the read splits into
+    // a clean branch (no curve column) and a tombstoned branch (with
+    // it), which must union by name without the column
+    val e = sources.Tables.load(spark, sfDir, "events")
+    val dir = Files.createTempDirectory("graft_zorder_mixz_").toString
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val base = e.filter(col("user_id") >= 5)
+    val batch = e.filter(col("user_id") < 5)
+    Zorder.writeHilbert(base, dir, Seq("user_id", "value"), bits = 8,
+      numFiles = 4)
+    fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .filter(st => !st.isDirectory &&
+        !graft.operators.Layout.isHidden(st.getPath.getName))
+      .foreach { st =>
+        val tmp = Files.createTempDirectory("graft_zorder_mixz_f_").toString
+        spark.read.parquet(st.getPath.toString).drop(Zorder.zColName)
+          .coalesce(1).write.mode("overwrite").parquet(tmp)
+        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
+          .filter(_.getPath.getName.startsWith("part-")).head.getPath
+        assert(fs.delete(st.getPath, false) && fs.rename(part, st.getPath))
+      }
+    assert(Zorder.appendClustered(batch, dir, batchId = 1))
+    val gone = batch.filter(col("event_id") % 2 === 0)
+    assert(Zorder.deleteClustered(spark, dir,
+      gone.select("event_id", "user_id", "value"), Seq("event_id")) ==
+      gone.count())
+    val back = Zorder.readClustered(spark, dir)
+    assert(!back.columns.contains(Zorder.zColName))
+    val expect = base.unionByName(batch.filter(col("event_id") % 2 =!= 0))
+    assert(fp(back.select(e.columns.map(col): _*)) == fp(expect),
+      "the mixed layout must read exactly its live rows")
+  }
+
+  test("generation manifests carry no curve-column stats") {
+    val e = sources.Tables.load(spark, sfDir, "events")
+    val dir = Files.createTempDirectory("graft_zorder_mstat_").toString
+    Zorder.writeHilbert(e.filter(col("user_id") >= 5), dir,
+      Seq("user_id", "value"), bits = 8, numFiles = 4)
+    assert(Zorder.appendClustered(e.filter(col("user_id") < 5), dir,
+      batchId = 1))
+    val manifests = new java.io.File(dir).listFiles().toSeq
+      .filter(_.getName.startsWith("_graft_manifest"))
+    assert(manifests.nonEmpty)
+    manifests.foreach { f =>
+      val body = new String(Files.readAllBytes(f.toPath), "UTF-8")
+      assert(body.contains("user_id"), s"${f.getName} lists no stats")
+      assert(!body.contains(Zorder.zColName),
+        s"${f.getName} leaks ${Zorder.zColName} stats into a manifest")
+    }
+  }
+
+  test("a fold refuses transform output carrying the reserved curve column") {
+    val e = sources.Tables.load(spark, sfDir, "events")
+    val dir = Files.createTempDirectory("graft_zorder_foldz_").toString
+    Zorder.writeHilbert(e.filter(col("user_id") >= 5), dir,
+      Seq("user_id", "value"), bits = 8, numFiles = 4)
+    assert(Zorder.appendClustered(e.filter(col("user_id") < 5), dir,
+      batchId = 1))
+    val (fs, root, cl, retiredM, tails, mains) =
+      Zorder.tailFoldPreamble(spark, dir, "test", 0L)
+    val err = intercept[IllegalArgumentException](
+      Zorder.foldAndPublish(spark, dir, fs, root, cl, 0L, retiredM, tails,
+        mains, extraProbe = None,
+        transform = _.get.withColumn("__GRAFT_Z", lit(1L))))
+    assert(err.getMessage.contains(Zorder.zColName), err.getMessage)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(root, Zorder.commitFile)),
+      "the gate must refuse before the commit point")
+    assert(Zorder.readClustered(spark, dir).count() == e.count())
   }
 }
